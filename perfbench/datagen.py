@@ -198,53 +198,49 @@ def _row(rng: random.Random, key, status_null: bool = False) -> tuple:
     )
 
 
-def dml_ops(seed: int, n_orders: int, n_cycles: int, batch_rows: int) -> list[list[DmlOp]]:
-    """Seeded op log, one list per cycle. A cycle holds each write kind
-    once, in seeded order, plus one pruned read (point or range) and one
-    time-travel read, each after a seeded write, so every cycle does the
-    same mix of work. Keys at or above ``n_orders`` are fresh (inserts);
-    update worksheets carry NULL keys and repeated keys the way imported
-    sheets do. The MERGE source has unique keys, as SQL MERGE requires."""
+def dml_ops(seed: int, n_orders: int, batch_rows: int) -> list[DmlOp]:
+    """Seeded op log: each write kind once, in seeded order, plus one
+    pruned read (point or range) and one time-travel read, each after a
+    seeded write, so every seed does the same mix of work. Keys at or
+    above ``n_orders`` are fresh (inserts); update worksheets carry NULL
+    keys and repeated keys the way imported sheets do. The MERGE source has unique keys, as SQL MERGE requires."""
     rng = random.Random(seed)
     next_key = n_orders
-    cycles: list[list[DmlOp]] = []
-    for _ in range(n_cycles):
-        ops: list[DmlOp] = []
-        kinds = list(DML_KINDS)
-        rng.shuffle(kinds)
-        reads: list[str | None] = [rng.choice(READ_KINDS[:2]), "read_version"]
-        reads += [None] * (len(kinds) - len(reads))
-        rng.shuffle(reads)
-        for kind, read in zip(kinds, reads):
-            if kind == "ingest_append":
-                ops.append(DmlOp(kind, [_row(rng, next_key + j) for j in range(batch_rows)]))
-                next_key += batch_rows
-            elif kind == "delete":
-                lo = rng.randrange(0, next_key)
-                ops.append(DmlOp(kind, predicate=f"o_orderkey >= {lo} AND o_orderkey < {lo + 40}"))
-            else:
-                keys = rng.sample(range(next_key), batch_rows)
-                if kind != "merge":
-                    keys += rng.sample(keys, max(1, batch_rows // 10))  # repeated keys
-                if kind != "ingest_update":
-                    keys += range(next_key, next_key + batch_rows // 4)  # inserts
-                    next_key += batch_rows // 4
-                rows = [_row(rng, k, status_null=rng.random() < 0.1) for k in keys]
-                if kind == "ingest_update":
-                    rows += [_row(rng, None) for _ in range(max(1, batch_rows // 20))]
-                rng.shuffle(rows)
-                ops.append(DmlOp(kind, rows))
-            if read is None:
-                continue
-            if read == "read_point":
-                ops.append(DmlOp(read, predicate=f"o_orderkey = {rng.randrange(0, next_key)}"))
-            elif read == "read_range":
-                lo = rng.randrange(0, next_key)
-                ops.append(DmlOp(read, predicate=f"o_orderkey BETWEEN {lo} AND {lo + 200}"))
-            else:
-                ops.append(DmlOp(read, version_back=rng.randrange(1, 4)))
-        cycles.append(ops)
-    return cycles
+    ops: list[DmlOp] = []
+    kinds = list(DML_KINDS)
+    rng.shuffle(kinds)
+    reads: list[str | None] = [rng.choice(READ_KINDS[:2]), "read_version"]
+    reads += [None] * (len(kinds) - len(reads))
+    rng.shuffle(reads)
+    for kind, read in zip(kinds, reads):
+        if kind == "ingest_append":
+            ops.append(DmlOp(kind, [_row(rng, next_key + j) for j in range(batch_rows)]))
+            next_key += batch_rows
+        elif kind == "delete":
+            lo = rng.randrange(0, next_key)
+            ops.append(DmlOp(kind, predicate=f"o_orderkey >= {lo} AND o_orderkey < {lo + 40}"))
+        else:
+            keys = rng.sample(range(next_key), batch_rows)
+            if kind != "merge":
+                keys += rng.sample(keys, max(1, batch_rows // 10))  # repeated keys
+            if kind != "ingest_update":
+                keys += range(next_key, next_key + batch_rows // 4)  # inserts
+                next_key += batch_rows // 4
+            rows = [_row(rng, k, status_null=rng.random() < 0.1) for k in keys]
+            if kind == "ingest_update":
+                rows += [_row(rng, None) for _ in range(max(1, batch_rows // 20))]
+            rng.shuffle(rows)
+            ops.append(DmlOp(kind, rows))
+        if read is None:
+            continue
+        if read == "read_point":
+            ops.append(DmlOp(read, predicate=f"o_orderkey = {rng.randrange(0, next_key)}"))
+        elif read == "read_range":
+            lo = rng.randrange(0, next_key)
+            ops.append(DmlOp(read, predicate=f"o_orderkey BETWEEN {lo} AND {lo + 200}"))
+        else:
+            ops.append(DmlOp(read, version_back=rng.randrange(1, 4)))
+    return ops
 
 
 def write_rows_parquet(path: str, rows: list[tuple]) -> int:

@@ -14,7 +14,7 @@ import tracer as tracing
 from workloads import WORKLOADS, dir_files, percentile
 
 SETUP_REPS = 3
-SF = float(os.environ.get("PERFBENCH_SF", "0.01"))
+SF = 0.01
 
 LAYERS = ("io", "dialect", "engine", "catalog", "reports", "operators", "ingest", "tables", "streaming", "ivm")
 

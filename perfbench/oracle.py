@@ -9,6 +9,7 @@ registry's own correctness gate.
 from __future__ import annotations
 
 import datetime
+import decimal
 import hashlib
 import math
 import os
@@ -44,6 +45,44 @@ def expected(fp: tuple) -> tuple:
     return fp
 
 
+def _parser(values: list):
+    """How to read a displayed (string) cell back as the type the
+    oracle's column holds, so the two compare as values."""
+    sample = next((v for v in values if v is not None), None)
+    if isinstance(sample, bool):
+        return lambda s: s == "true"
+    if isinstance(sample, (int, float, decimal.Decimal)):
+        return type(sample)
+    if isinstance(sample, datetime.datetime):
+        return datetime.datetime.fromisoformat
+    if isinstance(sample, datetime.date):
+        return datetime.date.fromisoformat
+    return str
+
+
+def _cell(val):
+    return "NaN" if isinstance(val, float) and math.isnan(val) else val
+
+
+def preview_matches(pdf, cols: list[str], rows: list[tuple], n: int = 100) -> tuple[bool, str]:
+    """Whether a 100-row preview (every cell stringified for display) is
+    the first ``n`` rows of the oracle's ordered result."""
+    want_n = min(n, len(rows))
+    if len(pdf) != want_n or sorted(pdf.columns) != sorted(cols):
+        return False, f"preview {len(pdf)} rows {list(pdf.columns)}; want {want_n} rows {cols}"
+    idx = [cols.index(c) for c in pdf.columns]
+    parse = [_parser([r[i] for r in rows]) for i in idx]
+    got = [
+        tuple(None if v is None else _cell(p(v)) for p, v in zip(parse, row))
+        for row in pdf.itertuples(index=False)
+    ]
+    want = [tuple(_cell(r[i]) for i in idx) for r in rows[:want_n]]
+    bad = next((i for i, (g, w) in enumerate(zip(got, want)) if g != w), None)
+    if bad is None:
+        return True, f"{want_n} rows"
+    return False, f"row {bad}: preview={got[bad]} duckdb={want[bad]}"
+
+
 def spark_fingerprint(df) -> tuple:
     return fingerprint(df.columns, [tuple(r) for r in df.collect()])
 
@@ -58,10 +97,12 @@ class Duck:
             path = os.path.join(data_dir, f"{t}.parquet")
             self.con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
-    def fingerprint(self, sql: str) -> tuple:
+    def rows(self, sql: str) -> tuple[list[str], list[tuple]]:
         res = self.con.execute(sql)
-        cols = [d[0] for d in res.description]
-        return fingerprint(cols, res.fetchall())
+        return [d[0] for d in res.description], res.fetchall()
+
+    def fingerprint(self, sql: str) -> tuple:
+        return fingerprint(*self.rows(sql))
 
     def close(self) -> None:
         self.con.close()
@@ -87,9 +128,9 @@ class DmlReplay:
         # LWW: the last occurrence of a key in file order wins
         self.con.execute(
             f"""CREATE TABLE src AS
-            SELECT * EXCLUDE (rn, pos) FROM (
-              SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY pos DESC) AS rn
-              FROM (SELECT *, row_number() OVER () AS pos FROM read_parquet('{path}'))
+            SELECT * EXCLUDE (rn, file_row_number) FROM (
+              SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY file_row_number DESC) AS rn
+              FROM read_parquet('{path}', file_row_number = true)
               WHERE o_orderkey IS NOT NULL)
             WHERE rn = 1"""
         )

@@ -31,25 +31,15 @@ ROOT = os.path.dirname(HERE)
 WORKLOAD_NAMES = ("interactive_sql", "table_dml")
 
 
-def _mem_total_gb() -> float:
-    try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("MemTotal:"):
-                    return int(line.split()[1]) / (1024 * 1024)
-    except OSError:
-        pass
-    return 8.0
-
-
 def configure_env(run_dir: str) -> dict:
     """Environment for the engine, set before pyspark starts its JVM.
     Returns what was set, for the run record."""
     nproc = os.cpu_count() or 1
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(min(4, nproc))
+    cpus = str(min(4, nproc))
     # the session factory's default heap is far above what a shared
-    # machine can give; 2 GB holds every workload at the benchmark scale
-    heap = os.environ.get("SPARKETL_DRIVER_MEM") or ("2g" if _mem_total_gb() >= 6 else "1g")
+    # machine can give; 2 GB holds every workload at the benchmark scale,
+    # and a fixed heap keeps the JVM's GC load the same on every machine
+    heap = "2g"
     tmp = os.path.join(run_dir, "tmp")
     local = os.path.join(run_dir, "spark-local")
     os.makedirs(tmp)

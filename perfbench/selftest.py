@@ -1,4 +1,4 @@
-"""Fast self-test of the benchmark, at a tiny scale factor.
+"""Self-test of the benchmark, at its own scale (sf0.01).
 
     python3 perfbench/selftest.py
 
@@ -21,7 +21,6 @@ import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SF = "0.003"
 
 
 def run(workload: str, trace: int, cwd: str = ROOT, **env) -> tuple[int, list[str], str]:
@@ -29,7 +28,7 @@ def run(workload: str, trace: int, cwd: str = ROOT, **env) -> tuple[int, list[st
         [sys.executable, os.path.join(cwd, "perfbench", "run.py"), "--workload", workload,
          "--seed", "7", "--seconds", "1", "--trace", str(trace)],
         cwd=cwd, capture_output=True, text=True, timeout=300,
-        env={**os.environ, "PERFBENCH_SF": SF, **env},
+        env={**os.environ, **env},
     )
     return p.returncode, p.stdout.strip().splitlines(), p.stderr
 
@@ -52,6 +51,18 @@ def main() -> int:
     e2e = {m["name"]: m["unit"] for m in bench["end_to_end"]}
     layer = {m["name"]: m["unit"] for m in bench["per_layer"]}
     names = [w["name"] for w in bench["workloads"]]
+
+    sys.path.insert(0, HERE)
+    import pandas as pd
+
+    import oracle
+
+    cols, rows = ["k", "v"], [(i, i * 0.5) for i in range(150)]
+    shown = pd.DataFrame({c: [str(r[j]) for r in rows[:100]] for j, c in enumerate(cols)})
+    assert oracle.preview_matches(shown, cols, rows)[0]
+    assert not oracle.preview_matches(shown.iloc[1:], cols, rows)[0]
+    assert not oracle.preview_matches(shown.iloc[::-1].reset_index(drop=True), cols, rows)[0]
+    print("ok  preview check accepts the first 100 rows and rejects a short or reordered preview")
 
     for w in names:
         code, lines, err = run(w, 0)

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import os
 import random
-import shutil
 import time
 from dataclasses import dataclass
 from typing import Callable
@@ -95,7 +94,8 @@ class InteractiveSQL(Workload):
     name = "interactive_sql"
     op_kinds = ("stmt", "query", "catalog", "report")
     # a fixed slice of the registry's Tier C entries, one per dialect
-    # rewrite family, so every pass runs the same statements
+    # rewrite family; each ends in a total ORDER BY, so its preview is
+    # the first 100 rows of the oracle's result
     STATEMENTS = [
         "tierc_tsql_top",  # TOP + [bracket] identifiers
         "tierc_tsql_funcs",  # ISNULL / LEN / CHARINDEX
@@ -113,14 +113,22 @@ class InteractiveSQL(Workload):
         ("part", "Pie Chart", "p_type", "p_size"),
         ("nation", "Bar Graph", "n_name", "n_regionkey"),
     ]
-    CATALOG_TABLES = ["orders", "lineitem", "customer", "part", "events"]
+    # a persistent table with a primary key, beside the loaded views
+    PK_TABLE, PK_COLUMNS = "region_pk", ["r_regionkey"]
+    CATALOG_TABLES = ["orders", "lineitem", "customer", "part", "events", PK_TABLE]
+    n_prepared = 0  # each set-up gets a fresh location for the PK table
 
     def prepare(self, ctx) -> None:
         from sparketl import engine, io
 
         io.load_tables(ctx.spark, ctx.data_dir)
         self.engine = engine.Engine(ctx.spark, os.path.join(ctx.run_dir, "saved_queries.json"))
+        self.n_prepared += 1
+        loc = os.path.join(ctx.run_dir, "catalog", f"{self.PK_TABLE}_{self.n_prepared}")
+        ctx.spark.sql(f"CREATE TABLE {self.PK_TABLE} USING parquet LOCATION '{loc}' AS SELECT * FROM region")
+        self.engine.catalog.set_primary_key(self.PK_TABLE, self.PK_COLUMNS)
         self.results: dict[str, object] = {}
+        self.previews: list[tuple[str, object]] = []  # every preview shown, in order
         self.rows: dict[str, tuple] = {}
         self.reports: dict[tuple, object] = {}
         self.catalog_out: list = []
@@ -132,7 +140,7 @@ class InteractiveSQL(Workload):
 
         def fn():
             df = __spark_entry__.queries()[name](ctx.spark, ctx.data_dir)
-            self.engine.preview(df)
+            self.previews.append((name, self.engine.preview(df)))
             self.results[name] = df
 
         return fn
@@ -179,7 +187,8 @@ class InteractiveSQL(Workload):
         self._report(ctx, self.REPORTS[0])()
 
     def pass_ops(self, ctx, k: int) -> list[Op]:
-        rng = random.Random(self.seed * 1009 + k)
+        """The same op list on every pass: order and targets come from the seed."""
+        rng = random.Random(self.seed)
         items = [("stmt", n) for n in self.STATEMENTS] + [("query", n) for n in self.OPERATORS]
         rng.shuffle(items)
         ops: list[Op] = []
@@ -198,10 +207,14 @@ class InteractiveSQL(Workload):
 
         oracles = __spark_entry__.oracle_sql()
         out = []
+        results = {name: duck.rows(oracles[name]) for name in self.results}
         for name, df in sorted(self.results.items()):
             got = oracle.spark_fingerprint(df)
-            want = oracle.expected(duck.fingerprint(oracles[name]))
+            want = oracle.expected(oracle.fingerprint(*results[name]))
             out.append((name, got == want, f"spark={got} duckdb={want}"))
+        for name, pdf in self.previews:
+            ok, detail = oracle.preview_matches(pdf, *results[name])
+            out.append((f"{name}:preview", ok, detail))
         for name, (cols, rows) in sorted(self.rows.items()):
             got = oracle.fingerprint(cols, rows)
             want = oracle.expected(duck.fingerprint(oracles[name]))
@@ -217,11 +230,16 @@ class InteractiveSQL(Workload):
             got = oracle.fingerprint(list(pdf.columns), [tuple(r) for r in pdf.itertuples(index=False)])
             want = oracle.expected(duck.fingerprint(sql))
             out.append((f"report:{table}", got == want, f"report={got} duckdb={want}"))
-        for dbs, tables, table, design, pks in self.catalog_out[-1:]:
-            cols = [d[0] for d in duck.con.execute(f"DESCRIBE {table}").fetchall()]
-            # temp views are not base tables, so ``tables`` lists none of them
-            ok = "default" in dbs and isinstance(tables, list) and design == cols and isinstance(pks, list)
-            out.append((f"catalog:{table}", ok, f"design={design} duckdb={cols}"))
+        for dbs, tables, table, design, pks in self.catalog_out:
+            src = "region" if table == self.PK_TABLE else table
+            cols = [d[0] for d in duck.con.execute(f"DESCRIBE {src}").fetchall()]
+            # the loaded temp views are not base tables and carry no key
+            want_pks = self.PK_COLUMNS if table == self.PK_TABLE else []
+            ok = dbs == ["default"] and tables == [self.PK_TABLE] and design == cols and pks == want_pks
+            out.append((
+                f"catalog:{table}", ok,
+                f"databases={dbs} tables={tables} design={design} duckdb={cols} keys={pks} want={want_pks}",
+            ))
         return out
 
     def record(self, ctx, lat: dict) -> dict:
@@ -325,22 +343,21 @@ class TableDML(Workload):
     name = "table_dml"
     op_kinds = ("commit",)
     BATCH_ROWS = 200
-    CYCLES = 4  # op-log length; a pass is one cycle
     KEEP_VERSIONS = 6
     # fixed, not seeded: a seeded chunk count changes the work per run
     STREAM_CHUNKS = 2
 
     def inputs(self, ctx) -> dict:
-        self.cycles = datagen.dml_ops(self.seed, ctx.rows["orders"], self.CYCLES, self.BATCH_ROWS)
+        self.ops = datagen.dml_ops(self.seed, ctx.rows["orders"], self.BATCH_ROWS)
         chg = os.path.join(ctx.data_dir, "changes")
         os.makedirs(chg, exist_ok=True)
-        for c, ops in enumerate(self.cycles):
-            for i, op in enumerate(ops):
-                if op.rows:
-                    op.path = os.path.join(chg, f"c{c:02d}_{i:02d}.parquet")
-                    op.nbytes = datagen.write_rows_parquet(op.path, op.rows)
+        for i, op in enumerate(self.ops):
+            if op.rows:
+                op.path = os.path.join(chg, f"op{i:02d}.parquet")
+                op.nbytes = datagen.write_rows_parquet(op.path, op.rows)
+        self.earlier_logs: list[list[tuple]] = []
         return {
-            "op_log_cycles": self.CYCLES,
+            "op_log_ops": len(self.ops),
             "batch_rows": self.BATCH_ROWS,
             "stream_chunks": self.STREAM_CHUNKS,
         }
@@ -439,10 +456,12 @@ class TableDML(Workload):
         self.engine.register_managed("orders_t", self.table)
 
     def pass_ops(self, ctx, k: int) -> list[Op]:
+        """Every pass runs the whole op log on a freshly prepared table."""
         if k:
+            self.earlier_logs.append(self.log)
             self.prepare(ctx)
         ops: list[Op] = []
-        for op in self.cycles[k % self.CYCLES]:
+        for op in self.ops:
             if op.kind.startswith("read"):
                 ops.append(Op("read", op.kind, self._read(ctx, op)))
             else:
@@ -485,6 +504,11 @@ class TableDML(Workload):
                 out.append((kind, res == want, f"rows={res} duckdb={want}"))
                 continue
             states[int(res)] = replay.state()
+        # earlier passes ran the same op log on fresh tables: same versions, same counts
+        last = [(kind, res) for kind, _op, res in self.log]
+        for k, log in enumerate(self.earlier_logs):
+            got = [(kind, res) for kind, _op, res in log]
+            out.append((f"pass_{k}_log", got == last, f"pass {k}={got} last={last}"))
         t = self.table
         want = oracle.expected(replay.state())
         got = oracle.spark_fingerprint(t.read())
