@@ -15,6 +15,10 @@ from pyspark.sql import SparkSession
 PK_PROPERTY = "sparketl.primary_key"
 
 
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
 @dataclass
 class ColumnInfo:
     name: str
@@ -33,9 +37,12 @@ class Catalog:
     def __init__(self, spark: SparkSession):
         self.spark = spark
 
-    # tool:155-170 — list accessible non-system DBs, sorted.
+    # tool:155-170 — list accessible non-system DBs, sorted. The
+    # listing methods of spark.catalog iterate with toLocalIterator(),
+    # one Spark job per partition; SHOW commands and the resolved
+    # schema return the same metadata without launching any job.
     def databases(self) -> list[str]:
-        return sorted(db.name for db in self.spark.catalog.listDatabases())
+        return sorted(r[0] for r in self.spark.sql("SHOW DATABASES").collect())
 
     # tool:146-153 — USE [db].
     def use_database(self, db: str) -> None:
@@ -44,10 +51,15 @@ class Catalog:
     # tool:173-181 — base tables of a DB.
     def tables(self, db: str | None = None) -> list[str]:
         db = db or self.spark.catalog.currentDatabase()
+        rows = self.spark.sql(f"SHOW TABLES IN {_quote(db)}").collect()
         return sorted(
-            t.name
-            for t in self.spark.catalog.listTables(db)
-            if t.tableType in ("MANAGED", "EXTERNAL")
+            r["tableName"]
+            for r in rows
+            if not r["isTemporary"]
+            and self.spark.catalog.getTable(
+                f"{_quote(db)}.{_quote(r['tableName'])}"
+            ).tableType
+            in ("MANAGED", "EXTERNAL")
         )
 
     # tool:183-220 — column name/type/nullable/default. The reference's
@@ -55,24 +67,24 @@ class Catalog:
     # the DDL DEFAULT expression in StructField.metadata under
     # CURRENT_DEFAULT (the expression future inserts use — the
     # INFORMATION_SCHEMA analogue), so it is read from the resolved
-    # schema, not listColumns (which drops metadata).
+    # schema, which also gives the column types (CHAR/VARCHAR resolve
+    # to string, as listColumns reports them).
     def table_design(self, table: str) -> dict[str, ColumnInfo]:
-        cols = self.spark.catalog.listColumns(table)
-        defaults: dict[str, str] = {}
         try:
-            for f in self.spark.table(table).schema.fields:
-                if f.metadata and "CURRENT_DEFAULT" in f.metadata:
-                    defaults[f.name] = f.metadata["CURRENT_DEFAULT"]
+            fields = self.spark.table(table).schema.fields
         except Exception:  # noqa: BLE001 — e.g. views of dropped tables
-            pass
+            return {
+                c.name: ColumnInfo(name=c.name, type=c.dataType, nullable=c.nullable)
+                for c in self.spark.catalog.listColumns(table)
+            }
         return {
-            c.name: ColumnInfo(
-                name=c.name,
-                type=c.dataType,
-                nullable=c.nullable,
-                default=defaults.get(c.name),
+            f.name: ColumnInfo(
+                name=f.name,
+                type=f.dataType.simpleString(),
+                nullable=f.nullable,
+                default=(f.metadata or {}).get("CURRENT_DEFAULT"),
             )
-            for c in cols
+            for f in fields
         }
 
     # tool:222-239 — PK columns; stored as a table property because

@@ -39,6 +39,7 @@ resolve last-write-wins in source order.
 from __future__ import annotations
 
 import json
+import logging
 import math
 import os
 import re
@@ -894,7 +895,13 @@ class ManagedTable:
                 # (OSError, pyarrow ArrowException, encoding) must not
                 # surface as a failed commit, or the caller would retry
                 # an append that landed and duplicate data
-                pass
+                logging.getLogger("sparketl").warning(
+                    "checkpoint of %s at v%d failed; readers replay deltas "
+                    "from the previous checkpoint",
+                    self.root,
+                    new_v,
+                    exc_info=True,
+                )
         return new_v
 
     def _write_local_rows(

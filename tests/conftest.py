@@ -1,4 +1,5 @@
 import sys
+import uuid
 
 import pytest
 
@@ -18,3 +19,16 @@ def spark():
 @pytest.fixture()
 def tmp_table_root(tmp_path):
     return str(tmp_path / "tbl")
+
+
+def count_jobs(spark, fn):
+    """(result of fn(), number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, "count jobs", interruptOnCancel=False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

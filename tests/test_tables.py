@@ -1338,3 +1338,28 @@ def test_incremental_topk_maintenance_equals_recompute(spark):
         for r in incremental_topk_maintenance(n, n).collect()  # no delta
     ]
     assert maintained == direct and len(direct) > 0
+
+
+def test_failed_checkpoint_is_logged_and_commit_stands(spark, tmp_table_root, monkeypatch, caplog):
+    """A checkpoint write is best-effort: its failure leaves the published
+    version standing and warns on the ``sparketl`` logger."""
+    import logging
+
+    from sparketl import tables as tb
+
+    monkeypatch.setattr(tb, "_CKPT_EVERY", 2)
+
+    def boom(self, snap):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(tb.ManagedTable, "_write_checkpoint", boom)
+    t = make(spark, tmp_table_root)
+    with caplog.at_level(logging.WARNING, logger="sparketl"):
+        v = t.append(spark.createDataFrame([(1, "a", 1.0)], SCHEMA))
+    assert v == 2
+    assert t.history()[-1] == 2
+    assert _rows(t) == [(1, "a", 1.0)]
+    warned = [r for r in caplog.records if r.name == "sparketl" and r.levelno == logging.WARNING]
+    assert len(warned) == 1
+    assert "checkpoint" in warned[0].getMessage()
+    assert warned[0].exc_info[0] is OSError
